@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import time
+from bisect import bisect_left, bisect_right
 from collections import OrderedDict
 from contextlib import contextmanager
 
@@ -406,23 +407,65 @@ class IndexMeta:
 _PHASE0_A = 256
 _PHASE0_BLOCKS = 1024
 
-_TP_COLS = [
-    "term",
-    "df",
-    "doc_blob",
-    "tf_blob",
-    "dl_blob",
-    "block_last_doc",
-    "block_doc_off",
-    "block_tf_off",
-    "block_dl_off",
-    "block_max_tfnorm",
-    "champ_doc",
-    "champ_tf",
-    "champ_dl",
-    "pos_blob",
-    "block_pos_off",
-]
+# Term-row list columns → the dtype of their TermPostings field
+_LIST_COLS = {
+    "block_last_doc": np.int64,
+    "block_doc_off": np.int64,
+    "block_tf_off": np.int64,
+    "block_dl_off": np.int64,
+    "block_max_tfnorm": np.float64,
+    "champ_doc": np.int64,
+    "champ_tf": np.int64,
+    "champ_dl": np.int64,
+    "block_pos_off": np.int64,
+}
+_BLOB_COLS = ("doc_blob", "tf_blob", "dl_blob", "pos_blob")
+_TP_COLS = ["df", *_BLOB_COLS, *_LIST_COLS]
+_RG_CACHE_SIZE = 64
+
+
+def _column_views(col, dtype=None) -> tuple:
+    """(offsets, values, valid) of one list or binary column of a row group:
+    row i is values[offsets[i]:offsets[i+1]], a slice of a numpy view of the
+    column's buffer. Offsets are a memoryview over their buffer, so a hit
+    slices with Python ints (no numpy scalars, no per-row objects kept);
+    `valid` is None when the column holds no nulls."""
+    import pyarrow as pa
+
+    arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    valid = arr.is_valid().to_pylist() if arr.null_count else None
+    if dtype is None:  # binary / large_binary: offsets + data buffer
+        _, off_buf, data_buf = arr.buffers()
+        off_type = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        offsets = np.frombuffer(off_buf, dtype=off_type)[arr.offset :][: len(arr) + 1]
+        values = np.frombuffer(data_buf or b"", dtype=np.uint8)
+    else:  # list / large_list: offsets index the unsliced child values
+        offsets = arr.offsets.to_numpy()
+        values = arr.values.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    return memoryview(offsets), values, valid
+
+
+def _term_postings(term: str, group: tuple, i: int) -> TermPostings:
+    """The one TermPostings constructor: row i of a row group's column views
+    as owned copies (blobs as bytes), so a cached TermPostings never pins
+    its row group's buffers. Null or missing champion lists read as empty
+    arrays; a null, missing or empty block_pos_off (pre-directory indexes)
+    and a null or missing pos_blob as None."""
+    dfs, views = group
+    f = {}
+    for name, is_blob, off, vals, valid in views:
+        if valid is not None and not valid[i]:
+            f[name] = None
+        elif is_blob:
+            f[name] = vals[off[i] : off[i + 1]].tobytes()
+        else:
+            f[name] = vals[off[i] : off[i + 1]].copy()
+    for n in ("champ_doc", "champ_tf", "champ_dl"):
+        if f.get(n) is None:
+            f[n] = np.empty(0, dtype=np.int64)
+    if f.get("block_pos_off") is not None and f["block_pos_off"].size == 0:
+        f["block_pos_off"] = None
+    return TermPostings(term=term, df=dfs[i], **f)
 
 
 class _SegmentReader:
@@ -430,51 +473,91 @@ class _SegmentReader:
     the `term` column is loaded once at open (cheap — no blobs); a lookup
     binary-searches the dictionary, then reads ONLY the row group containing
     the hit (segment files are written with small row groups for exactly this
-    access pattern). A tiny row-group cache makes repeated head-term lookups
-    free."""
+    access pattern). A row group is turned into numpy column views once, on
+    first touch, and kept in a 64-entry LRU; each hit then slices its row
+    out of those views into a TermPostings (owned copies: blobs as bytes,
+    block and champion lists as small arrays)."""
 
     def __init__(self, files: list[str]):
         import pyarrow.parquet as pq
 
         self._pfs = [pq.ParquetFile(f) for f in files]
         self._terms: list[np.ndarray] = []
-        self._rg_ends: list[np.ndarray] = []
+        self._rg_ends: list[list[int]] = []
         self._order: list[np.ndarray] = []  # argsort per file (robust to
         # unsorted files, e.g. hand-written or legacy segments)
         for pf in self._pfs:
             tcol = pf.read(columns=["term"]).column("term")
-            terms = np.asarray(tcol.to_pylist(), dtype=object)
+            terms = tcol.to_numpy(zero_copy_only=False).astype(object, copy=False)
             order = np.argsort(terms, kind="stable")
             self._terms.append(terms[order])  # sorted dictionary view
             self._order.append(order)
             counts = [pf.metadata.row_group(i).num_rows for i in range(pf.num_row_groups)]
-            self._rg_ends.append(np.cumsum(counts))
-        self._rg_cache: dict[tuple[int, int], object] = {}
+            self._rg_ends.append(np.cumsum(counts).tolist())
+        self._rg_cache: OrderedDict[tuple[int, int], tuple] = OrderedDict()
 
-    def lookup(self, wanted: list[str]) -> list[dict]:
-        out: list[dict] = []
-        for fi, terms in enumerate(self._terms):
-            if terms.size == 0:
-                continue
-            order = self._order[fi]
-            pos = np.searchsorted(terms, wanted)
-            for w, p in zip(wanted, pos):
-                if p >= terms.size or terms[p] != w:
+    @classmethod
+    def open(cls, seg_dir: str) -> "_SegmentReader | None":
+        """Reader over a segment directory's parquet files (None if none)."""
+        names = sorted(os.listdir(seg_dir)) if os.path.isdir(seg_dir) else []
+        files = [os.path.join(seg_dir, f) for f in names if f.endswith(".parquet")]
+        return cls(files) if files else None
+
+    def _row_group(self, fi: int, rg: int) -> tuple:
+        key = (fi, rg)
+        ent = self._rg_cache.get(key)
+        if ent is not None:
+            self._rg_cache.move_to_end(key)
+            return ent
+        pf = self._pfs[fi]
+        cols = [c for c in _TP_COLS if c in pf.schema_arrow.names]
+        # one thread: row groups are small by design, and the pool's hand-offs
+        # cost more CPU than its parallel column decode saves
+        tbl = pf.read_row_group(rg, columns=cols, use_threads=False)
+        views = [  # binary columns have no _LIST_COLS dtype
+            (n, n not in _LIST_COLS, *_column_views(tbl.column(n), _LIST_COLS.get(n)))
+            for n in tbl.column_names
+            if n != "df"
+        ]
+        ent = (memoryview(tbl.column("df").to_numpy()), views)
+        self._rg_cache[key] = ent
+        if len(self._rg_cache) > _RG_CACHE_SIZE:
+            self._rg_cache.popitem(last=False)
+        return ent
+
+    def lookup(self, wanted: list[str]) -> Iterator[TermPostings]:
+        """Yield a TermPostings per file holding each wanted term."""
+        for fi in range(len(self._pfs)):
+            terms, order, ends = self._terms[fi], self._order[fi], self._rg_ends[fi]
+            for w in wanted:
+                p = bisect_left(terms, w)
+                if p == len(terms) or terms[p] != w:
                     continue
                 idx = int(order[p])  # raw row index in file order
-                rg = int(np.searchsorted(self._rg_ends[fi], idx, side="right"))
-                key = (fi, rg)
-                tbl = self._rg_cache.get(key)
-                if tbl is None:
-                    avail = set(self._pfs[fi].schema_arrow.names)
-                    cols = [c for c in _TP_COLS if c in avail]
-                    tbl = self._pfs[fi].read_row_group(rg, columns=cols)
-                    if len(self._rg_cache) > 64:
-                        self._rg_cache.clear()
-                    self._rg_cache[key] = tbl
-                start = 0 if rg == 0 else int(self._rg_ends[fi][rg - 1])
-                out.append(tbl.slice(idx - start, 1).to_pylist()[0])
-        return out
+                rg = bisect_right(ends, idx)
+                start = ends[rg - 1] if rg else 0
+                yield _term_postings(w, self._row_group(fi, rg), idx - start)
+
+
+def _fetch_term_rows(
+    meta: IndexMeta, reader, terms: list[str], check
+) -> dict[str, TermPostings]:
+    """Segment-pruned term-row fetch, the one path for the base and every
+    delta leg: `reader(seg)` is the segment's _SegmentReader (None when the
+    segment holds no files). `check` is the query-budget check, run per
+    segment and per 64 rows — a wide candidate sweep (significant-terms
+    discovery at sf1.0 feeds thousands of terms) spends seconds here."""
+    out: dict[str, TermPostings] = {}
+    for seg, seg_terms in meta.seg_dirs_for_terms(terms).items():
+        check()
+        rd = reader(seg)
+        if rd is None:
+            continue
+        for i, tp in enumerate(rd.lookup(sorted(seg_terms))):
+            if i % 64 == 0:
+                check()
+            out[tp.term] = tp
+    return out
 
 
 class LocalSearcher:
@@ -531,8 +614,8 @@ class LocalSearcher:
         self._docs_budget = max(1, int(postings_cache_budget) // 4)
         self._result_cache: OrderedDict[tuple, tuple] = OrderedDict()
         self._result_cache_size = int(result_cache_size)
-        # term → TermPostings: parquet row-group hits still pay a to_pylist
-        # of multi-MB blob rows; the term dictionary itself is the hot set.
+        # term → TermPostings: parquet row-group hits still copy multi-MB
+        # blob rows out of the row group; the term dictionary is the hot set.
         # Bounded by BLOB BYTES (a head term's row is MBs) — count alone
         # could pin tens of GB under a wide query log.
         self._tp_cache: OrderedDict[str, TermPostings | None] = OrderedDict()
@@ -724,17 +807,7 @@ class LocalSearcher:
 
     def _reader(self, seg: int) -> _SegmentReader | None:
         if seg not in self._readers:
-            d = self.meta.seg_dir(seg)
-            files = (
-                [
-                    os.path.join(d, f)
-                    for f in sorted(os.listdir(d))
-                    if f.endswith(".parquet")
-                ]
-                if os.path.isdir(d)
-                else []
-            )
-            self._readers[seg] = _SegmentReader(files) if files else None
+            self._readers[seg] = _SegmentReader.open(self.meta.seg_dir(seg))
         return self._readers[seg]
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
@@ -803,9 +876,9 @@ class LocalSearcher:
                 )
 
     def lookup_terms(self, terms: list[str]) -> dict[str, TermPostings]:
-        """Segment-pruned, dictionary-indexed term row fetch, memoized per
-        term (positive and negative) — repeated head-term queries skip the
-        multi-MB blob-row deserialization entirely."""
+        """Segment-pruned, dictionary-indexed term row fetch
+        (_fetch_term_rows), memoized per term (positive and negative) —
+        repeated head-term queries skip the multi-MB blob copies."""
         self._budget_check()  # evaluator-entry boundary (all modes)
         out: dict[str, TermPostings] = {}
         todo: list[str] = []
@@ -819,7 +892,7 @@ class LocalSearcher:
                 todo.append(t)
         if not todo:
             return out
-        found = self._lookup_terms_uncached(todo)
+        found = _fetch_term_rows(self.meta, self._reader, todo, self._budget_check)
         for t in todo:
             tp = found.get(t)
             self._tp_cache[t] = tp
@@ -833,45 +906,6 @@ class LocalSearcher:
             if old is not None:
                 self._tp_cache_bytes -= (
                     len(old.doc_blob) + len(old.tf_blob) + len(old.dl_blob)
-                )
-        return out
-
-    def _lookup_terms_uncached(self, terms: list[str]) -> dict[str, TermPostings]:
-        out: dict[str, TermPostings] = {}
-        for seg, seg_terms in self.meta.seg_dirs_for_terms(terms).items():
-            # per-segment boundary: a wide candidate sweep (significant-
-            # terms discovery at sf1.0 feeds thousands of terms) spends
-            # SECONDS in blob-row fetch — without this check an expired
-            # budget is only noticed after the whole fetch completes
-            self._budget_check()
-            rd = self._reader(seg)
-            if rd is None:
-                continue
-            for i, row in enumerate(rd.lookup(sorted(seg_terms))):
-                if i % 64 == 0:
-                    self._budget_check()  # row-batch boundary
-                out[row["term"]] = TermPostings(
-                    term=row["term"],
-                    df=int(row["df"]),
-                    doc_blob=row["doc_blob"],
-                    tf_blob=row["tf_blob"],
-                    dl_blob=row["dl_blob"],
-                    block_last_doc=np.asarray(row["block_last_doc"], dtype=np.int64),
-                    block_doc_off=np.asarray(row["block_doc_off"], dtype=np.int64),
-                    block_tf_off=np.asarray(row["block_tf_off"], dtype=np.int64),
-                    block_dl_off=np.asarray(row["block_dl_off"], dtype=np.int64),
-                    block_max_tfnorm=np.asarray(
-                        row["block_max_tfnorm"], dtype=np.float64
-                    ),
-                    champ_doc=np.asarray(row.get("champ_doc") or [], dtype=np.int64),
-                    champ_tf=np.asarray(row.get("champ_tf") or [], dtype=np.int64),
-                    champ_dl=np.asarray(row.get("champ_dl") or [], dtype=np.int64),
-                    pos_blob=row.get("pos_blob"),
-                    block_pos_off=(
-                        np.asarray(row["block_pos_off"], dtype=np.int64)
-                        if row.get("block_pos_off")
-                        else None
-                    ),
                 )
         return out
 

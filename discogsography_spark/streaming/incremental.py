@@ -30,6 +30,7 @@ import os
 import shutil
 import time
 from contextlib import contextmanager
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -42,14 +43,16 @@ from discogsography_spark.index.builder import (
     _encode_sorted_stream,
     SEGMENT_SCHEMA,
     _encode_pdf,
-    term_segment,
 )
 from discogsography_spark.index.manifest import Manifest, _atomic_write_json
 from discogsography_spark.params import BLOCK_SIZE, BM25Params
 from discogsography_spark.query.engine import (
     IndexMeta,
     LocalSearcher,
+    TermPostings,
     _after_mask,
+    _fetch_term_rows,
+    _SegmentReader,
 )
 
 
@@ -159,8 +162,6 @@ class DeltaIndexWriter:
             for d in list_deltas(self.index_dir)
             if os.path.isdir(os.path.join(d, "docs"))
         ]
-        from functools import reduce
-
         # select the key columns per docmap BEFORE unioning: payload
         # columns may differ across base and deltas (schema AND type —
         # e.g. ts TIMESTAMP vs TIMESTAMP_NTZ), and only the key/slot
@@ -371,6 +372,29 @@ class DeltaIndexWriter:
         )
 
 
+def _union_docmaps(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Union by name of docmaps written at different times. Each column is
+    cast to the first concrete type a docmap in `paths` carries, so with the
+    base docmap first, deltas coerce to the base's types: a micro-batch
+    written straight from createDataFrame(pandas) stores `ts` as TIMESTAMP
+    where a base built from a pandas-written parquet stores TIMESTAMP_NTZ,
+    and an all-null payload column arrives as VOID (string if no docmap has
+    a concrete type). A column a docmap lacks reads as null."""
+    frames = [spark.read.parquet(p) for p in paths]
+    target: dict[str, T.DataType] = {}
+    for fr in frames:
+        for fld in fr.schema.fields:
+            if not isinstance(fld.dataType, T.NullType):
+                target.setdefault(fld.name, fld.dataType)
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            fr.select(*[F.col(c).cast(target.get(c, T.StringType())) for c in fr.columns])
+            for fr in frames
+        ],
+    )
+
+
 def live_docs_df(
     spark: SparkSession, index_dir: str, columns: list[str] | None = None
 ) -> DataFrame:
@@ -383,38 +407,29 @@ def live_docs_df(
     globally offset), minus tombstoned doc_ids via a broadcast anti-join
     (the tombstone set is small relative to the corpus and bounded by
     compaction cadence) and minus quarantined rows. Delta columns coerce
-    to the base docmap's types (micro-batches written straight from
-    createDataFrame(pandas) carry TIMESTAMP_NTZ where the base stores
-    TIMESTAMP). At 100 TB this is a multi-directory parquet scan with
+    to the base docmap's types (_union_docmaps: `ts` can arrive as
+    TIMESTAMP over a TIMESTAMP_NTZ base, or the reverse). At 100 TB this
+    is a multi-directory parquet scan with
     column pruning — select only what the analytics plan needs via
     `columns`."""
-    base = spark.read.parquet(os.path.join(index_dir, "docs"))
+    base_docs = os.path.join(index_dir, "docs")
     want = columns if columns is not None else [
-        c for c in base.columns if c != "_quarantine_reason"
+        c for c in spark.read.parquet(base_docs).columns
+        if c != "_quarantine_reason"
     ]
     if "doc_id" not in want:
         want = ["doc_id", *want]
-    types = {f.name: f.dataType for f in base.schema.fields}
-    frames = [base.select(*want)]
-    tombs = []
-    for d in list_deltas(index_dir):
-        p = os.path.join(d, "docs")
-        if os.path.isdir(p):
-            df = spark.read.parquet(p)
-            frames.append(
-                df.select(
-                    *[F.col(c).cast(types[c]).alias(c) for c in want]
-                )
-            )
-        tp = os.path.join(d, "tombstones.parquet")
-        if os.path.exists(tp):
-            tombs.append(
-                spark.read.parquet(tp).select("doc_id")
-            )
-    from functools import reduce
-
-    out = reduce(DataFrame.unionByName, frames).where(
-        F.col("doc_id").isNotNull()
+    deltas = list_deltas(index_dir)
+    docs = [p for d in deltas if os.path.isdir(p := os.path.join(d, "docs"))]
+    tombs = [
+        spark.read.parquet(p).select("doc_id")
+        for p in (os.path.join(d, "tombstones.parquet") for d in deltas)
+        if os.path.exists(p)
+    ]
+    out = (
+        _union_docmaps(spark, [base_docs, *docs])
+        .select(*want)
+        .where(F.col("doc_id").isNotNull())
     )
     if tombs:
         dead = reduce(DataFrame.unionByName, tombs).distinct()
@@ -722,42 +737,24 @@ class MergedSearcher:
         self.__dict__ = fresh.__dict__
         return True
 
-    def _delta_rows(self, delta: str, terms: list[str]) -> dict[str, dict]:
-        """Term rows from one delta via the same dictionary-indexed
-        row-group reader the base uses (_SegmentReader) — a pyarrow
+    def _delta_rows(self, delta: str, terms: list[str]) -> dict[str, TermPostings]:
+        """Term rows from one delta via the base's row-fetch path
+        (_fetch_term_rows over delta _SegmentReaders) — a pyarrow
         dataset filter would read the segment's ENTIRE blob columns per
         lookup (the to_table(filter=) trap), turning a 2-term probe into a
         multi-second scan on a large delta."""
-        out: dict[str, dict] = {}
-        by_seg: dict[int, list[str]] = {}
-        for t in terms:
-            by_seg.setdefault(term_segment(t, self.base.meta.num_segments), []).append(t)
-        for seg, seg_terms in by_seg.items():
-            rd = self._delta_reader(delta, seg)
-            if rd is None:
-                continue
-            for row in rd.lookup(sorted(seg_terms)):
-                out[row["term"]] = row  # raw dict is enough for decode
-        return out
+        def reader(seg: int):
+            return self._delta_reader(delta, seg)
+
+        return _fetch_term_rows(self.base.meta, reader, terms, self._budget_check)
 
     def _delta_reader(self, delta: str, seg: int):
         """Memoized _SegmentReader for one delta segment directory (None if
         the delta holds no files for that segment)."""
-        from discogsography_spark.query.engine import _SegmentReader
-
         key = (delta, seg)
         if key not in self._delta_readers:
             d = os.path.join(delta, "segments", f"seg={seg}")
-            files = (
-                [
-                    os.path.join(d, f)
-                    for f in sorted(os.listdir(d))
-                    if f.endswith(".parquet")
-                ]
-                if os.path.isdir(d)
-                else []
-            )
-            self._delta_readers[key] = _SegmentReader(files) if files else None
+            self._delta_readers[key] = _SegmentReader.open(d)
         return self._delta_readers[key]
 
     def _merged_rows(
@@ -1045,9 +1042,7 @@ class MergedSearcher:
                 parts_d, parts_tf, parts_dl = [], [], []
                 for dr in delta_rows:
                     if t in dr:
-                        row = dr[t]
-                        d, tf = decode_postings(row["doc_blob"], row["tf_blob"])
-                        dl = varbyte_decode(row["dl_blob"]).astype(np.int64)
+                        d, tf, dl = dr[t].decode_all()
                         parts_d.append(d)
                         parts_tf.append(tf)
                         parts_dl.append(dl)
@@ -2468,20 +2463,18 @@ class MergedSearcher:
                 for dr in delta_rows:
                     if t not in dr:
                         continue
-                    row = dr[t]
-                    if not row.get("pos_blob"):
+                    tp = dr[t]
+                    if not tp.pos_blob:
                         raise ValueError(
                             f"delta lacks positional postings for {t!r} — "
                             "phrase queries over the merged view need "
                             "positional deltas (base built with_positions "
                             "and deltas written by this version)"
                         )
-                    dd, dtf = decode_postings(row["doc_blob"], row["tf_blob"])
+                    dd, dtf = decode_postings(tp.doc_blob, tp.tf_blob)
                     parts_d.append(dd)
                     parts_tf.append(dtf)
-                    parts_pos.append(
-                        varbyte_decode(row["pos_blob"]).astype(np.int64)
-                    )
+                    parts_pos.append(varbyte_decode(tp.pos_blob).astype(np.int64))
                 if not parts_d:
                     cache[t] = None
                     continue
@@ -2988,36 +2981,8 @@ def consolidate_deltas(spark: SparkSession, index_dir: str) -> int:
         if os.path.isdir(os.path.join(d, "docs"))
     ]
     if docs_srcs:
-        # a micro-batch whose payload column was ALL NULL stored it as
-        # VOID; mergeSchema cannot reconcile VOID with a concrete type, so
-        # union by name with each VOID column cast to the first concrete
-        # type any sibling delta carries (string if none does)
-        from functools import reduce
-
-        from pyspark.sql.types import NullType, StringType
-
-        frames = [spark.read.parquet(p) for p in docs_srcs]
-        target: dict[str, object] = {}
-        for fr in frames:
-            for fld in fr.schema.fields:
-                if not isinstance(fld.dataType, NullType):
-                    target.setdefault(fld.name, fld.dataType)
-        fixed = []
-        for fr in frames:
-            for fld in fr.schema.fields:
-                if isinstance(fld.dataType, NullType):
-                    fr = fr.withColumn(
-                        fld.name,
-                        F.col(fld.name).cast(
-                            target.get(fld.name, StringType())
-                        ),
-                    )
-            fixed.append(fr)
         (
-            reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                fixed,
-            )
+            _union_docmaps(spark, docs_srcs)
             .write.mode("overwrite")
             .option("parquet.block.size", str(1024 * 1024))
             .parquet(os.path.join(tmp, "docs"))
@@ -3180,12 +3145,12 @@ def compact(spark: SparkSession, index_dir: str) -> int:
         os.path.join(d, "docs") for d in deltas if os.path.isdir(os.path.join(d, "docs"))
     ]
     union_docs = (
-        # mergeSchema: base and delta docmaps can carry different column
-        # sets (e.g. the base has a token column deltas don't); ALL payload
+        # base and delta docmaps can carry different column sets (e.g. the
+        # base has a token column deltas don't) and types; ALL payload
         # columns (facet fields, stored text) must survive compaction — a
         # compacted index serves the same facets/highlights as the live
         # merged view
-        spark.read.option("mergeSchema", "true").parquet(docs_dir, *delta_docs)
+        _union_docmaps(spark, [docs_dir, *delta_docs])
         # drop bookkeeping columns from a previous compact / quarantine
         # build (a stale old_doc_id would collide with the rename below)
         # and the token stream (rebuilt from postings, never read back)

@@ -143,3 +143,41 @@ def test_second_compaction_round(spark, ooo_index, tmp_path):
 
     union = pd.concat([ooo_index["tdf"], extra], ignore_index=True)
     _assert_matches_fresh_build(spark, idx, union, tmp_path)
+
+
+def test_compact_coerces_delta_docmap_types(spark, tmp_path):
+    """A base built from a pandas-written parquet stores `ts` as
+    TIMESTAMP_NTZ; a delta written straight from spark.createDataFrame
+    stores TIMESTAMP. compact() must coerce the delta docmap to the base
+    docmap's types instead of failing to merge the two schemas."""
+    import pandas as pd
+
+    tdf = make_transcripts(n_conversations=60, mean_turns=5, vocab_size=300)
+    convs = sorted(tdf["conv_id"].unique())
+    base_p = str(tmp_path / "base.parquet")
+    tdf[tdf["conv_id"].isin(convs[:45])].to_parquet(base_p, index=False)
+    idx = str(tmp_path / "idx")
+    IndexBuilder(idx, num_segments=4, head_df_threshold=10**9).build(
+        spark.read.parquet(base_p)
+    )
+    # the batch adds the last 15 conversations and rewrites the text of
+    # two base ones (upsert: their old versions are tombstoned)
+    edited = tdf[tdf["conv_id"].isin(convs[:2])].assign(
+        text=lambda d: d["text"] + " spark index"
+    )
+    batch = pd.concat([edited, tdf[tdf["conv_id"].isin(convs[45:])]])
+    DeltaIndexWriter(idx).write_batch(
+        spark.createDataFrame(batch), 0, upsert=True
+    )
+
+    def ts_type(docs_dir):
+        return spark.read.parquet(docs_dir).schema["ts"].dataType
+
+    delta_docs = os.path.join(list_deltas(idx)[0], "docs")
+    assert ts_type(os.path.join(idx, "docs")) != ts_type(delta_docs)
+    assert compact(spark, idx) == 1
+    assert ts_type(os.path.join(idx, "docs")) == ts_type(base_p)
+    alive = pd.concat(
+        [tdf[tdf["conv_id"].isin(convs[2:])], edited], ignore_index=True
+    )
+    _assert_matches_fresh_build(spark, idx, alive, tmp_path)
